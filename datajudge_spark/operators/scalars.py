@@ -18,12 +18,18 @@ Scale notes (100 TB design):
   short-circuits (LocalLimit) instead of counting 100 TB to answer "are there
   at least n rows" (reference rationale: constraints/nrows.py:41-48).
 - the exact percentile avoids a global row_number window (single-partition
-  hazard, reference db_access.py:821-825): it aggregates to the distinct-value
-  histogram first (one shuffle over |distinct| rows), then takes a cumulative
-  sum over values — identical result, bounded state.
+  hazard, reference db_access.py:821-825): one range-bucketed engine
+  (``_exact_percentiles``) aggregates only the target buckets to their
+  distinct-value histogram, then takes a cumulative sum over values —
+  identical result, bounded state.
 """
 
 from __future__ import annotations
+
+import functools
+import math
+from decimal import Decimal
+from fractions import Fraction
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -130,7 +136,7 @@ def get_missing_fraction(
     return row["n_missing"] / row["n_total"], [agg_df]
 
 
-#: Range-bucket count for the two-pass exact percentile.
+#: Range-bucket count per level of the exact-percentile engine.
 PERCENTILE_BUCKETS = 4096
 
 #: Refine the target range-bucket while it still holds more rows than
@@ -139,12 +145,15 @@ PERCENTILE_BUCKETS = 4096
 PERCENTILE_REFINE_ROWS = 65536
 
 
-def _order_proxy_expr(non_null, column: str, dtype: str):
-    """A numeric Column that is (non-strictly) MONOTONE in ``column``'s
-    sort order, used only to range-bucket non-numeric orderable types —
-    never to compare values (ties at proxy granularity just share a
-    bucket, and the final cumulative window orders by the true value).
+def _order_proxy_expr(non_null, dtype: str):
+    """A double Column that is (non-strictly) MONOTONE in the sort order
+    of ``non_null``'s ``value`` column (of type ``dtype``), used only to
+    range-bucket the percentile domain — never to compare values (ties
+    at proxy granularity just share a bucket, and the final cumulative
+    window orders by the true value).
 
+    - numeric: ``cast(double)`` (rounding is monotone; bigints past 2^53
+      and wide decimals may tie)
     - date: days since epoch (exact, strictly monotone)
     - timestamp / timestamp_ntz: microseconds since epoch (exact; µs
       magnitudes ~1e15 stay below 2^53, so the double is exact)
@@ -157,24 +166,23 @@ def _order_proxy_expr(non_null, column: str, dtype: str):
       agg) is what gives key-style columns ('Customer#000…') a usable
       spread instead of one hot bucket.
 
-    The returned expression reads the column via the alias ``__pv_src``
-    (callers project ``column AS __pv_src`` first — sidesteps SQL
-    identifier quoting inside the string branch's ``expr``).  Returns
-    None for types without a cheap monotone proxy (binary, boolean, …) —
-    callers fall back to the distinct-value histogram.
+    Returns None for types without a cheap monotone proxy (binary,
+    boolean, …) — callers fall back to the distinct-value histogram.
     """
+    if dtype.startswith("decimal") or dtype in (
+        "tinyint", "smallint", "int", "bigint", "float", "double"
+    ):
+        return F.col("value").cast("double")
     if dtype == "date":
-        return F.datediff(
-            F.col("__pv_src"), F.lit("1970-01-01")
-        ).cast("double")
+        return F.datediff(F.col("value"), F.lit("1970-01-01")).cast("double")
     if dtype in ("timestamp", "timestamp_ntz"):
-        ts = F.col("__pv_src")
+        ts = F.col("value")
         if dtype == "timestamp_ntz":
             ts = ts.cast("timestamp")
         return F.unix_micros(ts).cast("double")
     if dtype == "string":
         mm = non_null.agg(
-            F.min(column).alias("lo"), F.max(column).alias("hi")
+            F.min("value").alias("lo"), F.max("value").alias("hi")
         ).first()
         if mm is None or mm["lo"] is None:
             return F.lit(0.0)  # empty selection; caught by total == 0
@@ -184,320 +192,233 @@ def _order_proxy_expr(non_null, column: str, dtype: str):
         while k < len(blo) and k < len(bhi) and blo[k] == bhi[k]:
             k += 1
         return F.expr(
-            "CAST(conv(hex(rpad(substring(CAST(__pv_src AS BINARY), "
+            "CAST(conv(hex(rpad(substring(CAST(value AS BINARY), "
             f"{k + 1}, 6), 6, x'00')), 16, 10) AS DOUBLE)"
         )
     return None
 
 
-def exact_percentile_df(df, column: str, percentage: float):
-    """Exact percentile as a 1-row DataFrame, computed scale-out.
+def _fraction(percentage: float) -> Fraction:
+    """``percentage`` % as an exact rational (Fraction parses the decimal
+    string exactly), so every boundary test below is integer arithmetic:
+    a double ``percentage * total`` degrades past 2^53 and can select an
+    off-by-one value at an exact boundary."""
+    return Fraction(str(percentage)) / 100
+
+
+def _exact_percentiles(df, column: str, percentages, weight_column=None):
+    """Exact (weighted) percentiles of ``column`` as ONE row with a
+    ``p{pct:g}`` column per target (``.`` spelled ``_``: ``p50``,
+    ``p99_9``) — the engine behind every global percentile operator in
+    this module.
 
     Semantics (reference db_access.py:812-857): the smallest value v such
-    that at least ``percentage`` % of non-null values are <= v.
+    that the rows with value <= v carry at least ``percentage`` % of the
+    total mass.  A row's mass is 1, or its ``weight_column`` value; weights
+    must be non-negative integers (counts, cents, token counts) so every
+    cumulative sum is exact — a negative weight raises, since it would
+    break the monotone cumulative and silently return a wrong value.
     ``percentile_approx`` is deliberately NOT used (breaks exact
     semantics, SURVEY §7.3.1).
 
     A naive construction sorts ALL (distinct) values under one global
     window — a single-partition bottleneck on near-unique columns
-    (SURVEY §4.4). Instead, two fully-parallel passes:
+    (SURVEY §4.4).  Instead, fully-parallel passes:
 
-    1. range-bucket histogram: counts per ``PERCENTILE_BUCKETS`` equal
-       ranges (one groupBy; B rows to the driver),
-    2. driver cumsum over B bucket counts locates the target bucket,
-    3. the cumulative window runs only over the *distinct values of the
-       target bucket* (expected |distinct|/B rows; degenerates to the
-       naive plan only if every value lands in one bucket).
+    1. a stats probe: the range of a MONOTONE double proxy of the value
+       (:func:`_order_proxy_expr`) and the total mass;
+    2. one range-bucket histogram of rows and mass per
+       ``PERCENTILE_BUCKETS`` equal proxy ranges, shared by all targets;
+       a driver walk over it locates each target's bucket;
+    3. refinement, only for a target bucket holding more than
+       ``PERCENTILE_REFINE_ROWS`` rows: re-bucket it over its own proxy
+       range, one range probe and one histogram probe per level.  On
+       heavy-tailed domains (pairwise slopes, deviations) the
+       outlier-stretched range puts nearly all mass in one linear bucket
+       (measured: 1.28M of theil_sen's 2.9M pair slopes in a single
+       bucket), which the final window would otherwise sort on ONE task;
+    4. one filtered histogram over the union of the target regions, under
+       a cumulative window partitioned by region.
 
-    The result is identical to the naive construction — the bucketing is
-    a partitioning of the sorted domain, not an approximation.
+    Bucketing partitions the sorted domain, it does not approximate:
+    values whose proxies tie share a bucket, and the final window orders
+    by the TRUE value, so the result is identical to the naive plan.
+    Refinement depends only on a bucket's row count, and the probes are
+    memoised per bucket, so two targets' regions are either one region
+    or disjoint.  With no proxy (binary, boolean) or a degenerate proxy
+    range — one distinct value, distinct values that round to one double
+    (bigints past 2^53, wide decimals, strings identical through the
+    proxy's bytes), or a non-finite range — the region stays whole: the
+    distinct-value histogram under one window.
 
-    Non-numeric orderable columns (date/timestamp/string) range-bucket
-    on a MONOTONE numeric proxy (:func:`_order_proxy_expr` — day number
-    / epoch microseconds / prefix bytes) and then run the exact same
-    two-pass plan; the cumulative window still orders by the TRUE value,
-    restricted to the target bucket, so a near-unique timestamp column
-    no longer degenerates into one global single-partition window.
-    Types with no cheap proxy (binary/boolean) keep the distinct-value
-    histogram fallback (bounded by |distinct values|).
+    Scans: 3 for any number of targets (stats, bucket histogram, final
+    pass), plus two probes (range, histogram) per refinement level when
+    a target bucket exceeds ``PERCENTILE_REFINE_ROWS``; a string column
+    adds the proxy's min/max probe.
 
-    Every "have we reached the percentile" test uses the ONE comparison
-    form ``cum * 100 >= percentage * total`` — mixing formulations (e.g.
-    ``cum >= total*percentage/100`` in one place and ``cum*100/total >=
-    percentage`` in another) can disagree by 1 ulp at exact boundaries and
-    select off-by-one values.
+    Every "have we reached the percentile" test is the ONE exact integer
+    form ``cum * 100 * p_den >= p_num * total`` (``percentage`` =
+    p_num/p_den, :func:`_fraction`), solved once on the driver for the
+    smallest passing ``cum``: the bucket walk and the final window compare
+    against the same integer, so they never disagree at a boundary.
     """
-    from ..pipeline._util import materialize_once
-
-    # The two driver probes (min/max/total, per-bucket counts) and the
-    # final target-bucket histogram each scan the input: persist the
-    # single-column projection ONCE so passes 2 and 3 read cached
-    # blocks instead of re-running the upstream derivation / re-reading
-    # the source (callers like mad_outliers and theil_sen pay this
-    # three-scan pattern twice per call — measured seconds of the
-    # build).  One column persists at ~data/width cost; the cache is
-    # freed when the plan is GC'd.
-    from ..pipeline._util import spread
-
-    # spread before persisting: the cache keeps its build partitioning,
-    # and a single-file scan would otherwise pin every probe pass (the
-    # bucket histograms, the refinement min/max, the final window) to
-    # the scan's 1-3 tasks.  No-op at real corpus scale.
-    non_null = materialize_once(
-        spread(df.where(F.col(column).isNotNull()).select(column))
-    )
-    dtype = dict(df.dtypes)[column]
-    numeric = dtype in ("tinyint", "smallint", "int", "bigint", "float",
-                        "double") or dtype.startswith("decimal")
-
-    def _locate_bucket(src, bucket_col, cum_before: int, total: int):
-        """One bucket-histogram probe: walk the per-bucket counts in
-        bucket order with the single canonical comparison form and
-        return (target_bucket, cum_before, target_count)."""
-        bucket_counts = dict(
-            src.groupBy(bucket_col.alias("b"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-        target_bucket = PERCENTILE_BUCKETS - 1
-        for b in sorted(bucket_counts):
-            if (cum_before + bucket_counts[b]) * 100 >= percentage * total:
-                target_bucket = b
-                break
-            cum_before += bucket_counts[b]
-        return target_bucket, cum_before, bucket_counts.get(target_bucket, 0)
-
-    def _cum_select(hist, cum_before: int, total: int):
-        w = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-        cum = hist.select(
-            "value", (F.sum("cnt").over(w) + F.lit(cum_before)).alias("cum_cnt")
-        )
-        return cum.where(
-            F.col("cum_cnt") * 100 >= F.lit(percentage * total)
-        ).select(F.min("value").alias("value"))
-
-    if not numeric:
-        pv = _order_proxy_expr(non_null, column, dtype)
-        if pv is None:
-            # no cheap monotone proxy: distinct-value histogram under
-            # one cumulative window (bounded by |distinct values|)
-            total = non_null.count()
-            if total == 0:
-                raise ValueError(
-                    "Percentile selection could not be fetched."
-                )
-            hist = non_null.groupBy(F.col(column).alias("value")).agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            return _cum_select(hist, 0, total)
-        proj = non_null.select(
-            F.col(column).alias("__pv_src")
-        ).select(F.col("__pv_src").alias("value"), pv.alias("__pv"))
-        stats = proj.agg(
-            F.min("__pv").alias("lo"),
-            F.max("__pv").alias("hi"),
-            F.count(F.lit(1)).alias("total"),
-        ).first()
-        if stats is None or stats["total"] == 0 or stats["lo"] is None:
-            raise ValueError("Percentile selection could not be fetched.")
-        lo, hi, total = (
-            float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-        )
-        if hi == lo:
-            # proxy cannot split the domain (single value, or strings
-            # identical through 6 bytes past the common prefix): the
-            # histogram stays bounded by |distinct values|
-            hist = proj.groupBy("value").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            return _cum_select(hist, 0, total)
-        # iterative range refinement (see the numeric branch below):
-        # re-bucket within the target bucket while it still holds more
-        # rows than one window task should sort
-        cum_before, src = 0, proj
-        while True:
-            bucket = F.least(
-                F.floor(
-                    (F.col("__pv") - lo) / (hi - lo) * PERCENTILE_BUCKETS
-                ),
-                F.lit(PERCENTILE_BUCKETS - 1),
-            ).cast("int")
-            target_bucket, cum_before, tb_count = _locate_bucket(
-                src, bucket, cum_before, total
-            )
-            src = src.where(bucket == target_bucket)
-            if tb_count <= PERCENTILE_REFINE_ROWS:
-                break
-            sub = src.agg(
-                F.min("__pv").alias("lo"), F.max("__pv").alias("hi")
-            ).first()
-            lo2, hi2 = float(sub["lo"]), float(sub["hi"])
-            if hi2 == lo2:
-                break
-            lo, hi = lo2, hi2
-        hist = src.groupBy("value").agg(F.count(F.lit(1)).alias("cnt"))
-        return _cum_select(hist, cum_before, total)
-
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.count(F.lit(1)).alias("total"),
-    ).first()
-    if stats is None or stats["total"] == 0 or stats["lo"] is None:
-        raise ValueError("Percentile selection could not be fetched.")
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-    value_col = F.col(column).cast("double")
-    if hi == lo:
-        return non_null.agg(F.min(column).alias("value"))
-    # Iterative range REFINEMENT: on heavy-tailed domains (pairwise
-    # slopes, deviations) the outlier-stretched [lo, hi] puts nearly all
-    # mass in one linear bucket, and the final cumulative window would
-    # sort that bucket's distinct values on ONE task — the §4.4 hazard
-    # this two-pass plan exists to avoid (measured: 1.28M of theil_sen's
-    # 2.9M pair slopes in a single bucket).  Re-bucket WITHIN the target
-    # bucket (filter by bucket id — a pure partition of the sorted
-    # domain, so the selected value is identical) until it is small;
-    # each level is one cheap probe over the cached projection and
-    # shrinks the range by up to PERCENTILE_BUCKETS x.
-    cum_before, src = 0, non_null
-    while True:
-        bucket = F.least(
-            F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
-            F.lit(PERCENTILE_BUCKETS - 1),
-        ).cast("int")
-        target_bucket, cum_before, tb_count = _locate_bucket(
-            src, bucket, cum_before, total
-        )
-        src = src.where(bucket == target_bucket)
-        if tb_count <= PERCENTILE_REFINE_ROWS:
-            break
-        sub = src.agg(
-            F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-        ).first()
-        lo2, hi2 = float(sub["lo"]), float(sub["hi"])
-        if hi2 == lo2:
-            break
-        lo, hi = lo2, hi2
-    hist = (
-        src.groupBy(F.col(column).alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    return _cum_select(hist, cum_before, total)
-
-
-def exact_percentiles_df(df, column: str, percentages: list[float]):
-    """Several exact percentiles from ONE shared histogram pass.
-
-    Same semantics per target as :func:`exact_percentile_df` (smallest v
-    with >= p%% of non-null values <= v, identical single comparison
-    form), but the expensive work is shared: one stats pass, one
-    range-bucket histogram, and ONE filtered scan covering the union of
-    target buckets — 3 scans total for ANY number of percentiles, where
-    repeated single calls would pay 3 each. The per-bucket cumulative
-    windows stay bounded by |distinct values in bucket| exactly as in
-    the single-target construction.
-
-    Numeric columns only (the monitoring use case: p50/p90/p99 bands in
-    one pass). Returns one row with a ``p{pct:g}`` column per target.
-    """
-    if not percentages:
-        raise ValueError("At least one percentage is required.")
     from ..pipeline._util import materialize_once, spread
 
-    # same three-pass sharing discipline as exact_percentile_df: the
-    # stats probe, the bucket histogram and the union-of-target-buckets
-    # scan all read ONE spread, persisted single-column projection
-    # instead of re-scanning the source serially (a single-file scan
-    # reads as 1 task; spread no-ops at corpus scale)
-    non_null = materialize_once(
-        spread(df.where(F.col(column).isNotNull()).select(column))
+    if not percentages:
+        raise ValueError("At least one percentage is required.")
+    cols, keep = [F.col(column).alias("value")], F.col(column).isNotNull()
+    mass = F.lit(1).alias("__m")
+    if weight_column is not None:
+        keep &= F.col(weight_column).isNotNull()
+        cols.append(F.col(weight_column).cast("decimal(38,0)").alias("__m"))
+        mass = "__m"
+    # Every probe and the final pass read ONE persisted projection instead
+    # of re-running the upstream derivation / re-reading the source
+    # (callers like mad_outliers and theil_sen pay this pattern twice per
+    # call — measured seconds of the build).  The returned plan reads it
+    # lazily, so it stays cached (an identical input reuses the entry).
+    # spread before persisting: the cache keeps its build partitioning,
+    # and a single-file scan would otherwise pin every pass to the scan's
+    # 1-3 tasks.  No-op at real corpus scale.
+    non_null = materialize_once(spread(df.where(keep).select(*cols)))
+    proxy = _order_proxy_expr(non_null, dict(df.dtypes)[column])
+    proj = non_null.select(
+        "value", mass, (F.lit(0.0) if proxy is None else proxy).alias("__pv")
     )
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.count(F.lit(1)).alias("total"),
+    stats = proj.agg(
+        F.min("__pv").alias("lo"),
+        F.max("__pv").alias("hi"),
+        F.sum("__m").alias("total"),
+        F.min("__m").alias("mmin"),
     ).first()
-    if stats is None or stats["total"] == 0 or stats["lo"] is None:
-        raise ValueError("Percentile selection could not be fetched.")
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-
-    def _name(p: float) -> str:
-        return f"p{p:g}".replace(".", "_")
-
-    if hi == lo:
-        single = non_null.agg(F.min(column).alias("v"))
-        return single.select(
-            *[F.col("v").alias(_name(p)) for p in percentages]
+    if not stats["total"]:  # no rows, or zero total weight
+        what = "Weighted percentile" if weight_column else "Percentile selection"
+        raise ValueError(f"{what} could not be fetched.")
+    if stats["mmin"] < 0:
+        raise ValueError(
+            "Weighted percentile requires non-negative weights; "
+            f"min({weight_column}) = {stats['mmin']}."
         )
-    value_col = F.col(column).cast("double")
-    bucket = F.least(
-        F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
-        F.lit(PERCENTILE_BUCKETS - 1),
-    ).cast("int")
-    bucket_counts = dict(
-        non_null.groupBy(bucket.alias("b"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    )
-    # per-target bucket + its preceding cumulative count (driver fold
-    # over <= PERCENTILE_BUCKETS integers)
-    targets: dict[float, int] = {}
-    cum_before_map: dict[int, int] = {}
-    for pct in percentages:
-        cum_before, target_bucket = 0, PERCENTILE_BUCKETS - 1
-        for b in sorted(bucket_counts):
-            if (cum_before + bucket_counts[b]) * 100 >= pct * total:
-                target_bucket = b
-                break
-            cum_before += bucket_counts[b]
-        targets[pct] = target_bucket
-        cum_before_map[target_bucket] = cum_before
-    needed = sorted(set(targets.values()))
-    offset_entries = []
-    for b in needed:
-        offset_entries += [F.lit(b), F.lit(cum_before_map[b])]
-    offsets = F.create_map(*offset_entries)
+    total = int(stats["total"])
+
+    # A region is a range of the sorted domain, named by the path of
+    # bucket ids that leads to it from the root (the whole domain).
+    @functools.cache
+    def _bounds(path):
+        if not path:
+            return stats["lo"], stats["hi"]
+        return tuple(
+            proj.where(_region(path)).agg(F.min("__pv"), F.max("__pv")).first()
+        )
+
+    @functools.cache
+    def _bucket(path):
+        lo, hi = _bounds(path)
+        return F.least(
+            F.floor((F.col("__pv") - lo) / (hi - lo) * PERCENTILE_BUCKETS),
+            F.lit(PERCENTILE_BUCKETS - 1),
+        ).cast("int")
+
+    @functools.cache
+    def _region(path):
+        if not path:
+            return F.lit(True)
+        return _region(path[:-1]) & (_bucket(path[:-1]) == path[-1])
+
+    @functools.cache
+    def _histogram(path):
+        """(bucket id, rows, mass) of a region's sub-buckets, in order."""
+        return sorted(
+            proj.where(_region(path))
+            .groupBy(_bucket(path).alias("b"))
+            .agg(F.count(F.lit(1)), F.sum("__m"))
+            .collect()
+        )
+
+    def _locate(need: int):
+        """(region path, mass before the region) of the target whose
+        smallest passing cumulative mass is ``need``."""
+        path, before = (), 0
+        while True:
+            lo, hi = _bounds(path)
+            if not 0 < hi - lo < math.inf:
+                # one proxy value (or a non-finite range): nothing to split
+                return path, before
+            for b, b_rows, b_mass in _histogram(path):
+                if before + b_mass >= need:
+                    break
+                before += b_mass
+            else:  # percentage > 100: the last bucket, which never passes
+                before -= b_mass
+            path += (b,)
+            if b_rows <= PERCENTILE_REFINE_ROWS:
+                return path, before
+
+    targets = []
+    for p in percentages:
+        need = math.ceil(_fraction(p) * total)
+        path, before = _locate(need)
+        targets.append((p, path, need - before))
+    regions = sorted({path for _, path, _ in targets})
+    region = F.when(_region(regions[0]), 0)
+    for i, path in enumerate(regions[1:], 1):
+        region = region.when(_region(path), i)
     hist = (
-        non_null.where(bucket.isin(needed))
-        .groupBy(bucket.alias("b"), F.col(column).alias("value"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        proj.select(region.alias("__b"), "value", "__m")
+        .where(F.col("__b").isNotNull())
+        .groupBy("__b", "value")
+        .agg(F.sum("__m").alias("mass"))
     )
+    # one region needs no partition key: hashing one key would still sort
+    # on one task, one exchange later
     w = (
-        Window.partitionBy("b")
+        (Window.partitionBy("__b") if len(regions) > 1 else Window)
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    cum = hist.select(
-        "b",
-        "value",
-        (F.sum("cnt").over(w) + offsets[F.col("b")]).alias("cum_cnt"),
+    cum = hist.select("__b", "value", F.sum("mass").over(w).alias("cum"))
+    # one aggregate emits every target: a conditional min per target over
+    # its own region, against its in-region share of the threshold
+    return cum.agg(
+        *[
+            F.min(
+                F.when(
+                    (F.col("__b") == regions.index(path))
+                    & (F.col("cum") >= F.lit(Decimal(need_in_region))),
+                    F.col("value"),
+                )
+            ).alias(f"p{p:g}".replace(".", "_"))
+            for p, path, need_in_region in targets
+        ]
     )
-    # one aggregate emits every band: conditional min per target, the
-    # same single comparison form as the single-target operator
-    aggs = [
-        F.min(
-            F.when(
-                (F.col("b") == targets[pct])
-                & (F.col("cum_cnt") * 100 >= F.lit(pct * total)),
-                F.col("value"),
-            )
-        ).alias(_name(pct))
-        for pct in percentages
-    ]
-    return cum.agg(*aggs)
+
+
+def exact_percentile_df(df, column: str, percentage: float):
+    """Exact percentile as a 1-row ``value`` DataFrame, computed scale-out
+    (see :func:`_exact_percentiles` for semantics and plan)."""
+    return _exact_percentiles(df, column, [percentage]).toDF("value")
+
+
+def exact_percentiles_df(df, column: str, percentages: list[float]):
+    """Several exact percentiles from ONE shared histogram pass, one
+    ``p{pct:g}`` column each — the monitoring use case, p50/p90/p99 bands
+    in one pass, where repeated single calls would pay the probes once
+    each (see :func:`_exact_percentiles`)."""
+    return _exact_percentiles(df, column, percentages)
 
 
 def get_percentile(
     spark: SparkSession, ref: DataReference, percentage: float
-) -> tuple[float, _Plans]:
+) -> tuple[int | float, _Plans]:
     """Exact percentile metric (see :func:`exact_percentile_df`)."""
     column = ref.get_column(spark)
     selection = ref.get_selection(spark)
     candidates = exact_percentile_df(selection, column, percentage)
-    row = candidates.first()
-    if row is None or row["value"] is None:
+    value = candidates.first()["value"]
+    if value is None:
         raise ValueError("Percentile selection could not be fetched.")
-    return float(row["value"]), [candidates]
+    # a Python int is exact; float() would round bigints past 2^53
+    return (value if isinstance(value, int) else float(value)), [candidates]
 
 
 def get_date_span(
@@ -539,142 +460,25 @@ def get_date_growth_rate(
 def exact_weighted_percentile_df(
     df, column: str, weight_column: str, percentage: float
 ):
-    """Exact WEIGHTED percentile as a 1-row DataFrame (extension; the
-    reference's percentile is unweighted, db_access.py:812-857).
-
-    Semantics: the smallest value v such that the cumulative weight of
-    rows with value <= v reaches ``percentage`` % of the total weight.
-    With all weights 1 this is exactly :func:`exact_percentile_df`.
-
-    Weights must be non-negative integers (counts, cents, token counts)
-    so every cumulative sum is exact — no float accumulation order to
-    disagree about; a negative ``min(weight)`` raises (it would break
-    the monotone cumulative and silently return a wrong value). The
-    plan is the same two fully-parallel passes as the unweighted
-    operator: a range-bucket histogram of SUM(weight) (B rows to the
-    driver), a driver cumsum to locate the target bucket, then a
-    cumulative window over the distinct values of that bucket only.
-    The boundary test keeps the ONE comparison form, with
-    ``percentage`` expanded to an exact rational p_num/p_den:
-    ``cum * 100 * p_den >= p_num * total`` — all-integer on both the
-    driver and the engine, so the two never disagree even when
-    ``percentage * total`` exceeds double's 2^53 (keep ``percentage``
-    a short decimal; a 15-digit repeating fraction inflates p_den and
-    with it the decimal width headroom).
-    """
-    from fractions import Fraction
-
-    from ..pipeline._util import materialize_once
-
-    # same three-pass shape as exact_percentile_df: persist the 2-column
-    # projection so the stats probe, bucket-weights probe and final
-    # target-bucket histogram scan the source once, not three times
-    non_null = materialize_once(
-        df.where(
-            F.col(column).isNotNull() & F.col(weight_column).isNotNull()
-        ).select(column, weight_column)
-    )
-    w = F.col(weight_column).cast("decimal(38,0)")
-    # percentage as an exact rational (Fraction parses the decimal
-    # string exactly), so the boundary test is INTEGER arithmetic on
-    # both the driver and the engine — a double RHS degrades to 2^53
-    # precision and can disagree with the driver-side bucket selection
-    # for petabyte-scale weight totals
-    frac = Fraction(str(percentage))
-    p_num, p_den = frac.numerator, frac.denominator
-
-    def _cum_select(hist, cum_before: int, total: int):
-        win = Window.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
-        cum = hist.select(
-            "value",
-            (F.sum("wsum").over(win) + F.lit(cum_before).cast("decimal(38,0)"))
-            .alias("cum_w"),
-        )
-        rhs = F.lit(str(p_num * total)).cast("decimal(38,0)")
-        return cum.where(
-            F.col("cum_w") * (100 * p_den) >= rhs
-        ).select(F.min("value").alias("value"))
-
-    stats = non_null.agg(
-        F.min(column).alias("lo"),
-        F.max(column).alias("hi"),
-        F.sum(w).alias("total"),
-        F.min(w).alias("wmin"),
-    ).first()
-    if stats is None or stats["total"] is None or int(stats["total"]) <= 0:
-        raise ValueError("Weighted percentile could not be fetched.")
-    if int(stats["wmin"]) < 0:
-        raise ValueError(
-            "Weighted percentile requires non-negative weights; "
-            f"min({weight_column}) = {stats['wmin']}."
-        )
-    lo, hi, total = float(stats["lo"]), float(stats["hi"]), int(stats["total"])
-    if hi == lo:
-        return non_null.agg(F.min(column).alias("value"))
-    value_col = F.col(column).cast("double")
-    bucket = F.least(
-        F.floor((value_col - lo) / (hi - lo) * PERCENTILE_BUCKETS),
-        F.lit(PERCENTILE_BUCKETS - 1),
-    ).cast("int")
-    bucket_weights = dict(
-        non_null.groupBy(bucket.alias("b")).agg(F.sum(w).alias("ws")).collect()
-    )
-    cum_before, target_bucket = 0, PERCENTILE_BUCKETS - 1
-    for b in sorted(bucket_weights):
-        if (cum_before + int(bucket_weights[b])) * 100 * p_den >= p_num * total:
-            target_bucket = b
-            break
-        cum_before += int(bucket_weights[b])
-    hist = (
-        non_null.where(bucket == target_bucket)
-        .groupBy(F.col(column).alias("value"))
-        .agg(F.sum(w).alias("wsum"))
-    )
-    return _cum_select(hist, cum_before, total)
+    """Exact WEIGHTED percentile as a 1-row ``value`` DataFrame (extension;
+    the reference's percentile is unweighted, db_access.py:812-857): the
+    smallest value v such that the cumulative weight of rows with value
+    <= v reaches ``percentage`` % of the total weight.  With all weights 1
+    this is exactly :func:`exact_percentile_df`.  Weights must be
+    non-negative integers; see :func:`_exact_percentiles`."""
+    return _exact_percentiles(
+        df, column, [percentage], weight_column
+    ).toDF("value")
 
 
 def grouped_exact_percentile(
     df: DataFrame, group_col: str, value_col: str, percentage: float
 ) -> DataFrame:
-    """Exact per-group percentile (smallest v such that at least
-    ``percentage``% of the group's non-null values are <= v) — the
-    grouped form of :func:`exact_percentile_df`, one row per group.
-
-    The cumulative window is PARTITIONED BY GROUP over each group's
-    distinct-VALUE histogram — parallel across groups, and within a
-    group bounded by |distinct values| (best on bounded domains:
-    quantities, ratings, day counts; a near-unique column concentrated
-    in ONE group degenerates to that group's sort, at which point the
-    two-pass bucketed single-group form is the right tool).
-
-    The acceptance test uses the single comparison form
-    ``cum * 100 >= percentage * total`` (see exact_percentile_df's
-    ulp-boundary note).
-    """
-    hist = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(F.col(group_col).alias("grp"), F.col(value_col).alias("v"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    w_cum = (
-        Window.partitionBy("grp")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_all = Window.partitionBy("grp").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = hist.select(
-        "grp",
-        "v",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("total"),
-    )
-    return (
-        cum.where(F.col("cum") * 100 >= F.lit(percentage) * F.col("total"))
-        .groupBy("grp")
-        .agg(F.min("v").alias("value"))
-    )
+    """Exact per-group percentile, one ``(grp, value)`` row per group —
+    :func:`grouped_exact_percentiles` with one target."""
+    return grouped_exact_percentiles(
+        df, group_col, value_col, [percentage]
+    ).toDF("grp", "value")
 
 
 def grouped_exact_percentiles(
@@ -685,12 +489,18 @@ def grouped_exact_percentiles(
 ) -> DataFrame:
     """Several exact per-group percentiles in ONE pass: one row per
     group with a ``p{n}`` column per requested percentage (smallest v
-    such that at least n% of the group's non-null values are <= v).
+    such that at least n% of the group's non-null values are <= v) —
+    the grouped form of :func:`exact_percentiles_df`.
 
-    Any number of percentiles shares the single group-partitioned
-    cumulative window and ONE aggregate — never a pass per quantile
-    (the multi-quantile form of :func:`grouped_exact_percentile`; same
-    bounded-domain caveat, same single comparison form).
+    The cumulative window is PARTITIONED BY GROUP over each group's
+    distinct-VALUE histogram — parallel across groups, and within a
+    group bounded by |distinct values| (best on bounded domains:
+    quantities, ratings, day counts; a near-unique column concentrated
+    in ONE group degenerates to that group's sort, at which point the
+    range-bucketed single-group engine is the right tool).  Any number
+    of percentiles shares that window and ONE aggregate — never a pass
+    per quantile.  The acceptance test is the engine's exact integer
+    form ``cum * 100 * p_den >= p_num * total``, here per group.
     """
     if not percentages:
         raise ValueError("percentages must be non-empty")
@@ -710,18 +520,20 @@ def grouped_exact_percentiles(
     cum = hist.select(
         "grp",
         "v",
-        F.sum("cnt").over(w_cum).alias("cum"),
-        F.sum("cnt").over(w_all).alias("total"),
+        F.sum("cnt").over(w_cum).cast("decimal(38,0)").alias("cum"),
+        F.sum("cnt").over(w_all).cast("decimal(38,0)").alias("total"),
     )
+
+    def _reached(p):
+        frac = _fraction(p)
+        return F.col("cum") * F.lit(Decimal(frac.denominator)) >= (
+            F.col("total") * F.lit(Decimal(frac.numerator))
+        )
+
     def _alias(p):
         return f"p{int(p)}" if float(p).is_integer() else f"p{p}".replace(".", "_")
     aggs = [
-        F.min(
-            F.when(
-                F.col("cum") * 100 >= F.lit(float(p)) * F.col("total"),
-                F.col("v"),
-            )
-        ).alias(_alias(p))
+        F.min(F.when(_reached(p), F.col("v"))).alias(_alias(p))
         for p in percentages
     ]
     return cum.groupBy("grp").agg(*aggs)
@@ -753,12 +565,7 @@ def winsorized_stats(
     if not (0.0 < p_lo < p_hi < 100.0):
         raise ValueError("need 0 < p_lo < p_hi < 100")
 
-    def _name(p: float) -> str:
-        return f"p{p:g}".replace(".", "_")
-
-    cuts = exact_percentiles_df(df, column, [p_lo, p_hi]).select(
-        F.col(_name(p_lo)).alias("__lo"), F.col(_name(p_hi)).alias("__hi")
-    )
+    cuts = exact_percentiles_df(df, column, [p_lo, p_hi]).toDF("__lo", "__hi")
     x = F.col(column)
     clipped = F.least(F.greatest(x, F.col("__lo")), F.col("__hi"))
     return (

@@ -3,6 +3,8 @@
 Mirrors the reference's unit layer (SURVEY §5.1).
 """
 
+from decimal import Decimal
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -229,6 +231,113 @@ class TestPercentileBucketRefinement:
         monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 16)
         refined = sc.exact_percentile_df(df, "v", 75.0).first()["value"]
         assert refined == unrefined
+
+    @staticmethod
+    def _naive(rows, pct):
+        # smallest sorted value whose rank passes the exact boundary
+        import math
+        from fractions import Fraction
+
+        need = math.ceil(Fraction(str(pct)) * len(rows) / 100)
+        return rows[max(need, 1) - 1]
+
+    def test_multi_target_matches_naive_sorted_selection(
+        self, spark, monkeypatch
+    ):
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        df = self._skewed_df(spark)
+        rows = sorted(r[0] for r in df.collect())
+        # p1..p99.9 share the one overloaded level-1 bucket, which each
+        # refines; p0.01 and p100 land on the outliers' own buckets
+        pcts = [0.01, 1.0, 25.0, 25.01, 50.0, 99.9, 100.0]
+        got = sc.exact_percentiles_df(df, "v", pcts).first()
+        for pct, value in zip(pcts, got):
+            assert value == self._naive(rows, pct), (pct, value)
+
+    def test_unit_weights_match_naive_sorted_selection(
+        self, spark, monkeypatch
+    ):
+        import datajudge_spark.operators.scalars as sc
+
+        monkeypatch.setattr(sc, "PERCENTILE_REFINE_ROWS", 64)
+        df = self._skewed_df(spark).withColumn("w", F.lit(1))
+        rows = sorted(r[0] for r in df.collect())
+        for pct in (1.0, 25.0, 50.0, 90.0, 99.9, 100.0):
+            got = sc.exact_weighted_percentile_df(df, "v", "w", pct).first()[
+                "value"
+            ]
+            assert got == self._naive(rows, pct), (pct, got)
+
+
+class TestPercentileDoubleCollapse:
+    """Distinct values that round to ONE double (bigints past 2^53, wide
+    decimals) give the bucketing proxy a degenerate range; every
+    percentile path must still order them by their true value instead
+    of answering the minimum."""
+
+    BIG = 2**53
+    DEC_LO = Decimal("0.10000000000000000001")
+    DEC_HI = Decimal("0.10000000000000000002")
+
+    @pytest.fixture(params=["bigint", "decimal(38,20)"])
+    def collapsed(self, request, spark):
+        if request.param == "bigint":
+            lo, hi = self.BIG, self.BIG + 1
+        else:
+            lo, hi = self.DEC_LO, self.DEC_HI
+        df = spark.createDataFrame(
+            [(lo, 1)] + [(hi, 1)] * 3, f"v {request.param}, w bigint"
+        )
+        return df, lo, hi
+
+    def test_operators(self, collapsed):
+        from datajudge_spark.operators.scalars import (
+            exact_percentile_df,
+            exact_percentiles_df,
+            exact_weighted_percentile_df,
+        )
+
+        df, lo, hi = collapsed
+        for pct, want in ((25.0, lo), (90.0, hi), (100.0, hi)):
+            assert exact_percentile_df(df, "v", pct).first()["value"] == want
+            assert (
+                exact_weighted_percentile_df(df, "v", "w", pct).first()["value"]
+                == want
+            )
+        row = exact_percentiles_df(df, "v", [25.0, 90.0, 100.0]).first()
+        assert (row["p25"], row["p90"], row["p100"]) == (lo, hi, hi)
+
+    def test_constraint_compares_exact_bigint(self, spark):
+        from conftest import within_req
+
+        big = self.BIG
+        df = spark.createDataFrame(
+            [(big,)] + [(big + 1,)] * 3, "v bigint"
+        )
+        req = within_req(df, "collapsed_bigint")
+        req.add_numeric_percentile_constraint(
+            "v", 90, big + 1, max_absolute_deviation=0
+        )
+        # the minimum is one off: zero tolerance must reject it
+        req.add_numeric_percentile_constraint(
+            "v", 90, big, max_absolute_deviation=0
+        )
+        assert [r.outcome for r in req.test(spark)] == [True, False]
+
+    def test_constraint_on_wide_decimal(self, spark):
+        from conftest import within_req
+
+        df = spark.createDataFrame(
+            [(self.DEC_LO,), (self.DEC_HI,)], "v decimal(38,20)"
+        )
+        req = within_req(df, "collapsed_decimal")
+        # decimal percentiles reach the comparison as doubles
+        req.add_numeric_percentile_constraint(
+            "v", 100, float(self.DEC_HI), max_absolute_deviation=0
+        )
+        assert [r.outcome for r in req.test(spark)] == [True]
 
 
 class TestNonNumericPercentileProxy:

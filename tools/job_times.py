@@ -43,6 +43,8 @@ def main() -> None:
 
     from datajudge_spark.session import get_spark
 
+    # get_spark keeps the UI (and with it /api/v1) off unless asked
+    os.environ.setdefault("SPARK_GRAFT_UI_ENABLED", "true")
     spark = get_spark("datajudge-spark-jobtimes")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
