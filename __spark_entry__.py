@@ -456,9 +456,9 @@ def q_ks_statistic(spark, sf_dir):
 
 
 def q_ks_statistic_continuous(spark, sf_dir):
-    # distributed exact KS on a NEAR-UNIQUE column (the case where the
-    # windowed construction degenerates to one partition, SURVEY §4.4):
-    # range-partitioned sort + driver offsets, no global window
+    # distributed exact KS on a NEAR-UNIQUE column (the case where an
+    # unbucketed window degenerates to one partition, SURVEY §4.4): one
+    # max |cdf1 - cdf2| aggregate over the bucketed cross-CDF
     from datajudge_spark.operators.stats import ks_d_statistic_distributed
 
     li = _t(spark, sf_dir, "lineitem")
@@ -5139,10 +5139,9 @@ def q_cramer_von_mises(spark, sf_dir):
 
 def q_cross_cdf_dates(spark, sf_dir):
     # cross-CDF on a TEMPORAL column (order dates of high- vs
-    # low-priority orders) — the driver row for the round-8 regression
-    # fix: date/timestamp route through the repartitionByRange variant
-    # of the offset construction (float bucket arithmetic is invalid on
-    # datetimes).  Digest = per-month tail of the joint CDF.
+    # low-priority orders): dates bucket on their days-since-epoch proxy
+    # in the same bucketed cumulative as numerics, and the windows order
+    # by the true date.  Digest = per-month tail of the joint CDF.
     from datajudge_spark.operators.stats import get_cross_cdf
     from datajudge_spark.reference import DataReference
     from datajudge_spark.sources import ExpressionDataSource

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from ..condition import Condition, merge_conditions
 from ..reference import DataReference
+from ._order import _order_proxy_expr
 
 _Plans = list[DataFrame]
 
@@ -145,59 +146,6 @@ PERCENTILE_BUCKETS = 4096
 PERCENTILE_REFINE_ROWS = 65536
 
 
-def _order_proxy_expr(non_null, dtype: str):
-    """A double Column that is (non-strictly) MONOTONE in the sort order
-    of ``non_null``'s ``value`` column (of type ``dtype``), used only to
-    range-bucket the percentile domain — never to compare values (ties
-    at proxy granularity just share a bucket, and the final cumulative
-    window orders by the true value).
-
-    - numeric: ``cast(double)`` (rounding is monotone; bigints past 2^53
-      and wide decimals may tie)
-    - date: days since epoch (exact, strictly monotone)
-    - timestamp / timestamp_ntz: microseconds since epoch (exact; µs
-      magnitudes ~1e15 stay below 2^53, so the double is exact)
-    - string: the first 6 bytes AFTER the column-wide common prefix,
-      zero-right-padded and read big-endian as a 48-bit integer.  Spark
-      and DuckDB both order strings by unsigned UTF-8 byte comparison,
-      so the byte prefix is monotone; the zero padding keeps shorter
-      strings ordered before their extensions; 48 bits stay exact in a
-      double.  Stripping the shared prefix (computed from one min/max
-      agg) is what gives key-style columns ('Customer#000…') a usable
-      spread instead of one hot bucket.
-
-    Returns None for types without a cheap monotone proxy (binary,
-    boolean, …) — callers fall back to the distinct-value histogram.
-    """
-    if dtype.startswith("decimal") or dtype in (
-        "tinyint", "smallint", "int", "bigint", "float", "double"
-    ):
-        return F.col("value").cast("double")
-    if dtype == "date":
-        return F.datediff(F.col("value"), F.lit("1970-01-01")).cast("double")
-    if dtype in ("timestamp", "timestamp_ntz"):
-        ts = F.col("value")
-        if dtype == "timestamp_ntz":
-            ts = ts.cast("timestamp")
-        return F.unix_micros(ts).cast("double")
-    if dtype == "string":
-        mm = non_null.agg(
-            F.min("value").alias("lo"), F.max("value").alias("hi")
-        ).first()
-        if mm is None or mm["lo"] is None:
-            return F.lit(0.0)  # empty selection; caught by total == 0
-        blo = mm["lo"].encode("utf-8")
-        bhi = mm["hi"].encode("utf-8")
-        k = 0
-        while k < len(blo) and k < len(bhi) and blo[k] == bhi[k]:
-            k += 1
-        return F.expr(
-            "CAST(conv(hex(rpad(substring(CAST(value AS BINARY), "
-            f"{k + 1}, 6), 6, x'00')), 16, 10) AS DOUBLE)"
-        )
-    return None
-
-
 def _fraction(percentage: float) -> Fraction:
     """``percentage`` % as an exact rational (Fraction parses the decimal
     string exactly), so every boundary test below is integer arithmetic:
@@ -281,7 +229,7 @@ def _exact_percentiles(df, column: str, percentages, weight_column=None):
     # and a single-file scan would otherwise pin every pass to the scan's
     # 1-3 tasks.  No-op at real corpus scale.
     non_null = materialize_once(spread(df.where(keep).select(*cols)))
-    proxy = _order_proxy_expr(non_null, dict(df.dtypes)[column])
+    proxy = _order_proxy_expr(non_null, "value")
     proj = non_null.select(
         "value", mass, (F.lit(0.0) if proxy is None else proxy).alias("__pv")
     )

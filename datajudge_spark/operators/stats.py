@@ -6,22 +6,66 @@ Scale design: the reference computes per-row ``cume_dist() OVER (ORDER BY
 col)`` — a global, single-partition window over every row
 (db_access.py:1177-1180). We instead aggregate to the distinct-value
 histogram first (one shuffle, map-side partial agg), then compute the CDF as
-a cumulative sum over *distinct values*; the ordered window only ever sees
-|distinct| rows. The forward-fill after the full-outer join uses
-``last(col, ignorenulls=True)`` — one window call replacing the reference's
-running-count grouper + first_value construction (db_access.py:1239-1279,
-SURVEY §4.2).
+a cumulative sum over *distinct values* with the bucket-partitioned
+cumulative (:func:`_bucketed_global_cums`), so no window sorts every value on
+one partition. The two samples share one union histogram, so the
+reference's full-outer join and forward-fill (db_access.py:1239-1279,
+SURVEY §4.2) are not needed: a cumulative sum over a side's zero counts IS
+the forward fill.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..reference import DataReference
+from ._order import _order_proxy_expr
 
 _Plans = list[DataFrame]
+
+
+def _cross_cdf(
+    df1: DataFrame, df2: DataFrame, col1: str, col2: str
+) -> tuple[DataFrame, int, int]:
+    """``(frame, n1, n2)``: ``frame`` has one row ``(v, cdf1, cdf2)`` per
+    distinct non-null value of either sample, with each side's empirical
+    CDF at ``v``; ``n1``/``n2`` are the non-null side totals.  An empty
+    side's CDF is 0 everywhere.
+
+    Both samples union into ONE (v, n1, n2) histogram and both global
+    cumulatives come from one :func:`_bucketed_global_cums` call.  Every
+    union value carries both sides' counts, so the cumulative over a
+    side's zeros is the reference's forward fill.  ``cum/N`` is the
+    windowed ``cume_dist`` exactly (integer counts below 2^53, one
+    double division).
+    """
+
+    def side(df: DataFrame, col: str, first: int) -> DataFrame:
+        return df.select(
+            F.col(col).alias("v"),
+            F.lit(first).alias("n1"),
+            F.lit(1 - first).alias("n2"),
+        ).where(F.col("v").isNotNull())
+
+    hist = (
+        side(df1, col1, 1)
+        .unionAll(side(df2, col2, 0))
+        .groupBy("v")
+        .agg(F.sum("n1").alias("n1"), F.sum("n2").alias("n2"))
+    )
+    cums, totals = _bucketed_global_cums(
+        hist, ["n1", "n2"], return_totals=True, empty_ok=True
+    )
+    n1, n2 = totals["n1"], totals["n2"]
+    frame = cums.select(
+        "v",
+        (F.col("cum_n1") / F.lit(n1 or 1)).alias("cdf1"),
+        (F.col("cum_n2") / F.lit(n2 or 1)).alias("cdf2"),
+    )
+    return frame, n1, n2
 
 
 def get_cross_cdf(
@@ -33,128 +77,33 @@ def get_cross_cdf(
 ) -> tuple[DataFrame, str, str]:
     """Rows (value, cdf1(value), cdf2(value)) over the union of observed
     values, with forward-filled CDFs (reference _cross_cdf_selection,
-    db_access.py:1194-1280).
+    db_access.py:1194-1280), built by :func:`_cross_cdf`.
 
     E.g. ref1=[1,1,3,2], ref2=[3,5,4,5,8] yields
     [(1,.5,0),(2,.75,0),(3,1,.2),(4,1,.4),(5,1,.8),(8,1,1)]
     (golden: reference tests/integration/test_stats.py:27-35).
-
-    Scale construction (SURVEY §4.4): a naive per-side CDF + full-outer
-    join + forward-fill needs ordered windows over ALL distinct values —
-    a single-partition sort once the column is near-unique (continuous
-    domains). Instead both samples union into ONE (value, n1, n2)
-    histogram and the global cumulatives come from
-    :func:`_bucketed_global_cums` — the same equi-depth-bucketed
-    construction every rank/percentile operator in this module uses: a
-    percentile sketch assigns each distinct value a bucket (a pure
-    column expression), a bounded per-bucket window computes local
-    cumulative counts, and per-bucket offsets (one tiny collect) shift
-    them to global. The forward-fill disappears entirely: every union
-    value carries both sides' counts, and a cumulative sum over zeros
-    IS the forward fill. ``cum/N`` equals the windowed ``cum/N``
-    exactly (integer math in doubles, well under 2^53), so results are
-    bit-identical to the windowed construction.
-
-    Non-numeric orderable columns (no percentile sketch available) take
-    a ``repartitionByRange`` variant of the same offset construction —
-    one extra sampling scan, still no global window.
     """
     cdf_label1, cdf_label2 = cdf_label + "1", cdf_label + "2"
-    col1, col2 = ref1.get_column(spark), ref2.get_column(spark)
-    tagged = (
-        ref1.get_selection(spark)
-        .select(
-            F.col(col1).alias("v"),
-            F.lit(1).alias("__dj_n1"),
-            F.lit(0).alias("__dj_n2"),
-        )
-        .where(F.col("v").isNotNull())
-        .unionAll(
-            ref2.get_selection(spark)
-            .select(
-                F.col(col2).alias("v"),
-                F.lit(0).alias("__dj_n1"),
-                F.lit(1).alias("__dj_n2"),
-            )
-            .where(F.col("v").isNotNull())
-        )
+    frame, _, _ = _cross_cdf(
+        ref1.get_selection(spark),
+        ref2.get_selection(spark),
+        ref1.get_column(spark),
+        ref2.get_column(spark),
     )
-    hist = tagged.groupBy("v").agg(
-        F.sum("__dj_n1").alias("__dj_n1"), F.sum("__dj_n2").alias("__dj_n2")
-    )
-    dtype = dict(hist.dtypes)["v"]
-    # date/timestamp deliberately take the repartitionByRange path below:
-    # the bucketed construction's degenerate check and linear fallback do
-    # float arithmetic on the bounds (invalid for temporal values), while
-    # the range-partition variant orders ANY orderable type.
-    numeric = dtype in (
-        "tinyint", "smallint", "int", "bigint", "float", "double",
-    ) or dtype.startswith("decimal")
-    if numeric:
-        # totals ride the scaffold's probe aggregate (return_totals):
-        # the former raw-plan totals agg re-computed the ENTIRE
-        # histogram derivation — a second scan of both selections —
-        # before the helper's persist materialized
-        cums, totals = _bucketed_global_cums(
-            hist, ["__dj_n1", "__dj_n2"], return_totals=True,
-            empty_ok=True,
-        )
-        total1 = int(totals["__dj_n1"])
-        total2 = int(totals["__dj_n2"])
-        if total1 == 0 and total2 == 0:
-            # hist rows all carry n1+n2 >= 1, so zero totals means an
-            # empty histogram: same empty frame as before
-            empty = hist.select(
-                F.col("v").alias(value_label),
-                F.lit(0.0).alias(cdf_label1),
-                F.lit(0.0).alias(cdf_label2),
-            )
-            return empty, cdf_label1, cdf_label2
-        filled = cums.select(
-            F.col("v").alias(value_label),
-            (F.col("cum___dj_n1") / F.lit(total1 or 1)).alias(cdf_label1),
-            (F.col("cum___dj_n2") / F.lit(total2 or 1)).alias(cdf_label2),
-        )
-        return filled, cdf_label1, cdf_label2
-    # non-numeric orderable fallback: repartitionByRange (a parallel,
-    # sampling-based range sort) + per-partition offsets — the window
-    # only ever sees one range partition
-    ranged = (
-        hist.repartitionByRange("v")
-        .withColumn("__dj_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    per_part = sorted(
-        ranged.groupBy("__dj_pid")
-        .agg(F.sum("__dj_n1").alias("t1"), F.sum("__dj_n2").alias("t2"))
-        .collect(),
-        key=lambda r: r["__dj_pid"],
-    )
-    total1 = sum(int(r["t1"]) for r in per_part)
-    total2 = sum(int(r["t2"]) for r in per_part)
-    offsets, acc1, acc2 = [], 0, 0
-    for r in per_part:
-        offsets.append((int(r["__dj_pid"]), acc1, acc2))
-        acc1 += int(r["t1"])
-        acc2 += int(r["t2"])
-    off_df = spark.createDataFrame(
-        offsets, "__dj_pid int, __dj_off1 long, __dj_off2 long"
-    )
-    w = (
-        Window.partitionBy("__dj_pid")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = ranged.join(F.broadcast(off_df), "__dj_pid").select(
-        F.col("v").alias(value_label),
-        (
-            (F.sum("__dj_n1").over(w) + F.col("__dj_off1")) / F.lit(total1 or 1)
-        ).alias(cdf_label1),
-        (
-            (F.sum("__dj_n2").over(w) + F.col("__dj_off2")) / F.lit(total2 or 1)
-        ).alias(cdf_label2),
-    )
-    return filled, cdf_label1, cdf_label2
+    frame = frame.toDF(value_label, cdf_label1, cdf_label2)
+    return frame, cdf_label1, cdf_label2
+
+
+def _ks_d_frame(
+    df1: DataFrame, df2: DataFrame, col1: str, col2: str
+) -> DataFrame:
+    """One-row ``d = max |cdf1 - cdf2|`` aggregate over :func:`_cross_cdf`
+    (reference db_access.py:1283-1315); raises ``ValueError`` when a
+    sample has no non-null value."""
+    frame, n1, n2 = _cross_cdf(df1, df2, col1, col2)
+    if n1 == 0 or n2 == 0:
+        raise ValueError("Could not compute d statistic on empty sample.")
+    return frame.select(F.max(F.abs(F.col("cdf1") - F.col("cdf2"))).alias("d"))
 
 
 def get_ks_2sample(
@@ -163,143 +112,24 @@ def get_ks_2sample(
     """Two-sample Kolmogorov-Smirnov test statistic
     d = max |cdf1 - cdf2| (reference db_access.py:1283-1315).
 
-    Computed via :func:`ks_d_statistic_distributed` — value-identical to
-    the cross-CDF construction (verified in tests), but with no stage
-    whose size depends on |distinct values| landing in one partition.
+    The returned plan is the aggregate that computed ``d``.
     """
-    df1, df2 = ref1.get_selection(spark), ref2.get_selection(spark)
-    d = ks_d_statistic_distributed(
-        df1, df2, ref1.get_column(spark), ref2.get_column(spark)
+    plan = _ks_d_frame(
+        ref1.get_selection(spark),
+        ref2.get_selection(spark),
+        ref1.get_column(spark),
+        ref2.get_column(spark),
     )
-    # plan surface for failure reporting: the cross-CDF selection
-    filled, c1, c2 = get_cross_cdf(spark, ref1, ref2)
-    agg_df = filled.select(F.max(F.abs(F.col(c1) - F.col(c2))).alias("d"))
-    return d, [agg_df]
+    return float(plan.first()["d"]), [plan]
 
 
 def ks_d_statistic_distributed(
     df1: DataFrame, df2: DataFrame, col1: str, col2: str
 ) -> float:
-    """Exact two-sample KS d-statistic with NO global-window stage.
-
-    The histogram-based construction above bounds the ordered window by
-    |distinct values| — fine for discrete domains, but on a continuous
-    column |distinct| ~ |rows| and the window degenerates to a global
-    single-partition sort (SURVEY §4.4). This variant stays parallel at
-    any cardinality:
-
-    1. ONE map-side aggregate scan computes side totals N1, N2 AND
-       approximate range boundaries (a ``percentile_approx`` sketch over
-       the union) — boundary accuracy only affects bucket *balance*,
-       never the result;
-    2. union both samples with a side tag, aggregated to
-       (value, n1, n2) per distinct value — one shuffle, map-side agg;
-    3. each distinct value is assigned the range bucket
-       ``#boundaries <= value`` (a pure column expression — no
-       ``repartitionByRange`` sampling job, which would re-scan and
-       re-aggregate the whole union a third time);
-    4. ONE pass over the bucketed histogram: within-bucket CDF diff
-       ``dw = cumw1/N1 − cumw2/N2`` (window partitioned by bucket —
-       bounded, parallel), reduced to per-bucket
-       ``(t1, t2, max dw, min dw)``;
-    5. driver fold over the (range-ordered) buckets: with running
-       offsets ``C_p = off1/N1 − off2/N2``, the supremum is
-       ``max_p max(|max_dw_p + C_p|, |min_dw_p + C_p|)`` — |F1 − F2| is
-       dw + C_p and C_p is constant within a bucket, so the bucket
-       extrema are exactly the candidates.
-
-    Two scans total, nothing cached or scanned twice. Equal to the
-    windowed construction (the supremum over step points of the
-    empirical CDF difference) up to double-rounding of the offset
-    addition. Non-numeric orderable columns (no ``percentile_approx``
-    sketch available) fall back to ``repartitionByRange`` for step 3,
-    which costs one extra sampling scan but is otherwise identical.
-    """
-    tagged = df1.select(
-        F.col(col1).alias("val"), F.lit(1).alias("n1"), F.lit(0).alias("n2")
-    ).where(F.col("val").isNotNull()).unionAll(
-        df2.select(
-            F.col(col2).alias("val"), F.lit(0).alias("n1"), F.lit(1).alias("n2")
-        ).where(F.col("val").isNotNull())
-    )
-    dtype = dict(tagged.dtypes)["val"]
-    numeric = dtype in (
-        "tinyint", "smallint", "int", "bigint", "float", "double", "date",
-        "timestamp",
-    ) or dtype.startswith("decimal")
-    from ..pipeline._util import materialize_once
-
-    n_buckets = tagged.sparkSession.sparkContext.defaultParallelism
-    fracs = [i / n_buckets for i in range(1, n_buckets)]
-    # Aggregate FIRST, then probe totals and boundaries from the
-    # persisted (value, n1, n2) histogram: one scan of each source
-    # instead of two, and the persist holds |distinct| rows, not |rows|.
-    # The sketch now sees distinct values unweighted — that can only
-    # shift bucket BALANCE, which the driver fold is invariant to.
-    hist = materialize_once(
-        tagged.groupBy("val").agg(
-            F.sum("n1").alias("n1"), F.sum("n2").alias("n2")
-        )
-    )
-    aggs = [F.sum("n1").alias("t1"), F.sum("n2").alias("t2")]
-    if numeric and fracs:
-        aggs.append(
-            F.percentile_approx(
-                "val", _sql_double_array(fracs), 1000
-            ).alias("bounds")
-        )
-    tot = hist.agg(*aggs).first()
-    total1 = int(tot["t1"] or 0)
-    total2 = int(tot["t2"] or 0)
-    if total1 == 0 or total2 == 0:
-        raise ValueError("Could not compute d statistic on empty sample.")
-    bounds = []
-    if numeric and fracs and tot["bounds"] is not None:
-        seen = set()
-        for b in tot["bounds"]:
-            if b is not None and b not in seen:
-                seen.add(b)
-                bounds.append(b)
-    if bounds:
-        # range bucket = number of boundaries <= value; boundaries are
-        # sorted, so bucket ids enumerate the ranges in value order.
-        bucket = _bounds_bucket_sql("val", bounds)
-        if bucket is None:  # non-numeric boundary: Column-API fold
-            bucket = F.aggregate(
-                F.array(*[F.lit(b) for b in bounds]),
-                F.lit(0),
-                lambda acc, b: acc
-                + F.when(F.col("val") >= b, F.lit(1)).otherwise(F.lit(0)),
-            )
-        ranged = hist.withColumn("pid", bucket)
-    else:
-        ranged = hist.repartitionByRange("val").withColumn(
-            "pid", F.spark_partition_id()
-        )
-    w = (
-        Window.partitionBy("pid")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    dw = F.sum("n1").over(w) / F.lit(total1) - F.sum("n2").over(w) / F.lit(total2)
-    per_part = (
-        ranged.select("pid", "n1", "n2", dw.alias("dw"))
-        .groupBy("pid")
-        .agg(
-            F.sum("n1").alias("t1"),
-            F.sum("n2").alias("t2"),
-            F.max("dw").alias("mx"),
-            F.min("dw").alias("mn"),
-        )
-        .collect()
-    )
-    d, acc1, acc2 = 0.0, 0, 0
-    for r in sorted(per_part, key=lambda r: r.pid):
-        c = acc1 / total1 - acc2 / total2
-        d = max(d, abs(r.mx + c), abs(r.mn + c))
-        acc1 += r.t1
-        acc2 += r.t2
-    return float(d)
+    """Exact two-sample KS d-statistic of ``df1[col1]`` vs ``df2[col2]``
+    with no global-window stage at any cardinality (see
+    :func:`_cross_cdf`)."""
+    return float(_ks_d_frame(df1, df2, col1, col2).first()["d"])
 
 
 def _sql_str(value) -> str:
@@ -1094,39 +924,42 @@ def _sample_pred(col: str = "v") -> Column:
 
 
 def _equidepth_bounds(
-    cached: DataFrame, n_buckets: int, extra_aggs: tuple | list = ()
+    cached: DataFrame,
+    n_buckets: int,
+    extra_aggs: tuple | list = (),
+    pv: Column | None = None,
 ) -> tuple[list, object]:
-    """Equi-DEPTH bucket boundaries for a (v, ...) distinct-value frame:
-    a ``percentile_approx`` sketch (accuracy 1000) over a
-    ``EQUIDEPTH_SAMPLE_FRACTION`` hash-sample of the cached frame,
-    computed in the SAME single job as the exact lo/hi (conditional
+    """Equi-DEPTH bucket boundaries for a (v, ...) distinct-value frame,
+    on the monotone double proxy ``pv`` of v (default ``cast(v AS
+    DOUBLE)``; see :func:`_order_proxy_expr`): a ``percentile_approx``
+    sketch (accuracy 1000) over a ``EQUIDEPTH_SAMPLE_FRACTION``
+    hash-sample of the cached frame, computed in the SAME single job as
+    the exact lo/hi of v and the proxy range plo/phi (conditional
     aggregates over :func:`_sample_pred`).  Returns ``(bounds,
-    stats_row)`` where stats carries lo/hi for the degenerate checks.
-    Boundary/sample error affects bucket *balance* only, never
-    correctness — bucket membership is a pure function of v.
-    ``bounds`` may be empty (tiny frame, empty sample): callers must
-    fall back to linear interpolation, not assume a single value.
+    stats_row)``.  Boundary/sample error affects bucket *balance* only,
+    never correctness — bucket membership is a pure function of v.
+    ``bounds`` may be empty (tiny frame, empty sample) and is meaningful
+    only where the proxy range is finite and non-degenerate.
     """
+    pv = F.col("v").cast("double") if pv is None else pv
     fracs = _equidepth_fracs(cached.sparkSession, n_buckets)
-    if not fracs:
-        return [], cached.agg(
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.count(F.lit(1)).alias("n_rows"),
-            *extra_aggs,
-        ).first()
-    sampled = F.when(_sample_pred(), F.col("v"))
+    sampled = F.when(_sample_pred(), pv)
+    sketch = [
+        F.percentile_approx(
+            sampled, _sql_double_array(fracs), 1_000
+        ).alias("bounds")
+    ] if fracs else []
     stats = cached.agg(
         F.min("v").alias("lo"),
         F.max("v").alias("hi"),
+        F.min(pv).alias("plo"),
+        F.max(pv).alias("phi"),
         F.count(F.lit(1)).alias("n_rows"),
         F.count(sampled).alias("m"),
-        F.percentile_approx(
-            sampled, _sql_double_array(fracs), 1_000
-        ).alias("bounds"),
+        *sketch,
         *extra_aggs,
     ).first()
-    if stats["lo"] is None or stats["lo"] == stats["hi"]:
+    if not fracs:
         return [], stats
     return _dedupe_bounds(stats["bounds"], sample_n=int(stats["m"])), stats
 
@@ -1136,8 +969,8 @@ def _bucketed_global_cum(
 ) -> DataFrame:
     """(v, *cnt_cols) histogram -> adds ``cum``: the INCLUSIVE global
     cumulative of ``cnt_cols[0]`` in ascending ``v`` order, without a
-    global window.  ``vals`` must have a numeric column ``v``; rows with
-    the same ``v`` must already be aggregated (one row per value).
+    global window.  ``vals`` must have an orderable column ``v``; rows
+    with the same ``v`` must already be aggregated (one row per value).
 
     Buckets are EQUI-DEPTH (boundaries from a ``percentile_approx``
     sketch over the distinct-value rows), not linear [min, max]
@@ -1154,8 +987,6 @@ def _bucketed_global_cum(
     three consumers — bounds probe, per-bucket totals, windowed join —
     all read cached blocks.
     """
-    from ..pipeline._util import materialize_once
-
     out = _bucketed_global_cums(
         vals, [cnt_cols[0]], carry_cols=cnt_cols[1:], n_buckets=n_buckets
     )
@@ -1200,6 +1031,15 @@ def _bucketed_global_cums(
     bit-identical to a sequential global sum — the determinism path the
     survival family (operators.timeseries) rides.
 
+    ``v`` may be any orderable type: buckets are cut on its monotone
+    double proxy (:func:`_order_proxy_expr`, the same rule the exact
+    percentile engine uses; a string ``v`` adds the proxy's min/max
+    probe), and the window orders by the true ``v``, so values whose
+    proxies tie just share a bucket.  When the proxy range is
+    degenerate (distinct values that round to one double, bigints past
+    2^53, wide decimals, a type without a proxy) or non-finite, the
+    whole frame is one bucket.
+
     ``return_totals=True`` additionally returns ``{col: grand total}``
     (int / ``decimal.Decimal``) — free from the offsets fold, saving
     callers a separate totals scan (e.g. cox ``n_subjects``).
@@ -1227,6 +1067,9 @@ def _bucketed_global_cums(
 
     specs = _cum_col_specs(vals, cum_cols)
 
+    def _zero(c: str):
+        return 0 if specs[c] is None else Decimal(0)
+
     def _typed(c: str):
         # degenerate branches mirror the normal path's result types
         # (window-sum widens longs to bigint, decimals to DECIMAL(38,s))
@@ -1235,17 +1078,21 @@ def _bucketed_global_cums(
         return F.col(c).cast(t).alias(f"cum_{c}")
 
     cached = materialize_once(vals)
+    proxy = _order_proxy_expr(cached, "v")
+    pv = F.lit(0.0) if proxy is None else proxy
     extra = (
         [F.sum(c).alias(f"__tot_{c}") for c in cum_cols]
         if return_totals
         else []
     )
-    bounds, stats = _equidepth_bounds(cached, n_buckets, extra_aggs=extra)
+    bounds, stats = _equidepth_bounds(
+        cached, n_buckets, extra_aggs=extra, pv=pv
+    )
 
     def _probe_totals():
         return {
             c: (
-                (0 if specs[c] is None else Decimal(0))
+                _zero(c)
                 if stats[f"__tot_{c}"] is None
                 else (
                     int(stats[f"__tot_{c}"])
@@ -1265,11 +1112,9 @@ def _bucketed_global_cums(
         out = cached.select(
             "v", *cum_cols, *carry_cols, *[_typed(c) for c in cum_cols]
         )
-        zeros = {
-            c: (0 if specs[c] is None else Decimal(0)) for c in cum_cols
-        }
+        zeros = {c: _zero(c) for c in cum_cols}
         return (out, zeros) if return_totals else out
-    if float(hi) == float(lo):
+    if lo == hi:
         # single distinct value: one row, each cum == its own count
         out = cached.select(
             "v", *cum_cols, *carry_cols, *[_typed(c) for c in cum_cols]
@@ -1308,36 +1153,26 @@ def _bucketed_global_cums(
         if not return_totals:
             return out
         return out, _probe_totals()
-    if bounds:
-        # bucket = number of boundaries <= v: monotone in v, so bucket
-        # ids enumerate the value ranges in order (ties at a boundary go
-        # to the upper bucket on both sides of any engine — arithmetic)
-        b = _bounds_bucket_sql("v", bounds)
-        if b is None:  # non-numeric boundary: Column-API fold
-            b = F.aggregate(
-                F.array(*[F.lit(bd) for bd in bounds]),
-                F.lit(0),
-                lambda acc, bd: acc
-                + F.when(F.col("v") >= bd, F.lit(1)).otherwise(F.lit(0)),
-            )
-        b = b.cast("int")
+    plo, phi = stats["plo"], stats["phi"]
+    if not 0 < phi - plo < math.inf:
+        b = F.lit(0)  # degenerate or non-finite proxy range: one bucket
+    elif bounds:
+        # bucket = number of boundaries <= proxy: monotone in v, so
+        # bucket ids enumerate the value ranges in order (ties at a
+        # boundary go to the upper bucket on both sides of any engine —
+        # arithmetic).  The bounds are doubles: always an SQL literal.
+        b = _bounds_bucket_sql("__pv", bounds)
     else:
         # empty sample (tiny frame): linear edges are fine at that size
         b = F.least(
-            F.floor(
-                (F.col("v").cast("double") - float(lo))
-                / (float(hi) - float(lo))
-                * n_buckets
-            ),
+            F.floor((F.col("__pv") - plo) / (phi - plo) * n_buckets),
             F.lit(n_buckets - 1),
-        ).cast("int")
-    hist = cached.withColumn("__b", b)
+        )
+    hist = cached.withColumn("__pv", pv).withColumn("__b", b.cast("int"))
     per_bucket = hist.groupBy("__b").agg(
         *[F.sum(c).alias(c) for c in cum_cols]
     ).collect()
-    acc = {
-        c: (0 if specs[c] is None else Decimal(0)) for c in cum_cols
-    }
+    acc = {c: _zero(c) for c in cum_cols}
     offsets: dict[str, dict[int, object]] = {c: {} for c in cum_cols}
     for row in sorted(per_bucket, key=lambda r: r["__b"]):
         for c in cum_cols:

@@ -51,8 +51,10 @@ def materialize_once(df: DataFrame) -> DataFrame:
     fault-tolerance is why this is persist and NOT ``localCheckpoint``:
     checkpoint blocks are unreplicated and unrecoverable, acceptable
     only where lineage truncation is mandatory (iterative loops, see
-    ``dedup.duplicate_clusters``).  Blocks are freed when the plan is
-    garbage collected.
+    ``dedup.duplicate_clusters``).  Blocks are NOT freed when the
+    DataFrame is garbage collected: the entry stays in the session's
+    CacheManager until it is unpersisted (an identical plan reuses the
+    same entry).
     """
     return df.persist(_PERSIST_LEVEL)
 

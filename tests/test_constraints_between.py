@@ -200,10 +200,8 @@ class TestCrossCdfGolden:
             assert c2 == pytest.approx(ec2)
 
     def test_cross_cdf_and_ks_on_dates(self, spark, date_table1, date_table2):
-        """Temporal columns must route through the orderable
-        range-partition path — the bucketed numeric path does float()
-        arithmetic on the bounds, invalid for datetime values
-        (regression: round-7 ADVICE)."""
+        """Temporal columns bucket on their epoch proxy; the reported d is
+        the statistic of the returned cross-CDF."""
         ref1 = make_ref(date_table1, "d1", ["col_date"])
         ref2 = make_ref(date_table2, "d2", ["col_date"])
         filled, l1, l2 = get_cross_cdf(spark, ref1, ref2)
@@ -215,6 +213,68 @@ class TestCrossCdfGolden:
             assert c2 == pytest.approx(max(k - 1, 0) / 18)
         d, _ = get_ks_2sample(spark, ref1, ref2)
         assert d == pytest.approx(1 / 19)
+        # d is the statistic of the cross-CDF, bit for bit
+        assert d == max(abs(c1 - c2) for _, c1, c2 in rows)
+
+    def test_ks_on_strings_is_exact(self, spark):
+        # cdf1 = 1/3, 2/3, 1, 1 and cdf2 = 0, 1/2, 1/2, 1 over a..d:
+        # d = 1 - 1/2 exactly
+        ref1 = make_ref(
+            spark.createDataFrame([("a",), ("b",), ("c",)], "s string"),
+            "s1", ["s"],
+        )
+        ref2 = make_ref(
+            spark.createDataFrame([("b",), ("d",)], "s string"), "s2", ["s"]
+        )
+        # no partition coalescing: the values spread over several
+        # shuffle partitions, as they would on a cluster
+        key = "spark.sql.adaptive.coalescePartitions.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            d, _ = get_ks_2sample(spark, ref1, ref2)
+        finally:
+            spark.conf.set(key, old)
+        assert d == 0.5
+
+    def test_cross_cdf_on_timestamps_matches_naive(self, spark):
+        import datetime as dt
+        import random
+
+        rng = random.Random(5)
+        base = dt.datetime(2021, 3, 1)
+
+        def sample(n, shift):
+            return [
+                base + dt.timedelta(
+                    seconds=rng.randint(0, 40) + shift,
+                    microseconds=rng.choice([0, 1, 999_999]),
+                )
+                for _ in range(n)
+            ]
+
+        s1, s2 = sample(60, 0), sample(45, 7)
+        ref1 = make_ref(
+            spark.createDataFrame([(t,) for t in s1], "t timestamp"),
+            "t1", ["t"],
+        )
+        ref2 = make_ref(
+            spark.createDataFrame([(t,) for t in s2], "t timestamp"),
+            "t2", ["t"],
+        )
+        filled, l1, l2 = get_cross_cdf(spark, ref1, ref2)
+        got = sorted((r["val"], r[l1], r[l2]) for r in filled.collect())
+        want = [
+            (
+                v,
+                sum(t <= v for t in s1) / len(s1),
+                sum(t <= v for t in s2) / len(s2),
+            )
+            for v in sorted(set(s1) | set(s2))
+        ]
+        assert got == want
+        d, _ = get_ks_2sample(spark, ref1, ref2)
+        assert d == max(abs(c1 - c2) for _, c1, c2 in want)
 
     def test_ks_constraint_on_dates(self, spark, date_table1, date_table2):
         req = between_req(date_table1, date_table2, "d1", "d2")

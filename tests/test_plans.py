@@ -116,19 +116,36 @@ def test_rollup_single_expand_pass(spark):
 def test_cross_cdf_no_single_partition_window(spark):
     # cross-CDF on a near-unique (continuous-like) column must not funnel
     # the distinct-value histogram through one partition: the construction
-    # range-partitions the union histogram and windows WITHIN partitions.
+    # buckets the union histogram on an order proxy and windows WITHIN
+    # buckets, for numeric and non-numeric orderable types alike.
     from datajudge_spark.operators.stats import get_cross_cdf
     from datajudge_spark.reference import DataReference
     from datajudge_spark.sources import ExpressionDataSource
 
-    d1 = spark.range(0, 5000).selectExpr("cast(id * 1.7 as double) as v")
-    d2 = spark.range(0, 5000).selectExpr("cast(id * 2.3 + 0.5 as double) as v")
-    ref1 = DataReference(ExpressionDataSource(d1, "a"), ["v"])
-    ref2 = DataReference(ExpressionDataSource(d2, "b"), ["v"])
-    filled, c1, c2 = get_cross_cdf(spark, ref1, ref2)
-    plan = _executed_plan(filled)
-    assert "Exchange SinglePartition" not in plan, plan
-    assert "Window" in plan  # the bounded per-partition cumsum remains
+    inputs = {
+        "double": (
+            "cast(id * 1.7 as double)",
+            "cast(id * 2.3 + 0.5 as double)",
+        ),
+        "string": (
+            "concat('k#', lpad(cast(id * 3 as string), 8, '0'))",
+            "concat('k#', lpad(cast(id * 5 + 1 as string), 8, '0'))",
+        ),
+        "date": (
+            "date_add(date'2000-01-01', cast(id as int))",
+            "date_add(date'2001-06-01', cast(id as int))",
+        ),
+    }
+    for kind, (expr1, expr2) in inputs.items():
+        d1 = spark.range(0, 5000).selectExpr(f"{expr1} as v")
+        d2 = spark.range(0, 5000).selectExpr(f"{expr2} as v")
+        ref1 = DataReference(ExpressionDataSource(d1, "a"), ["v"])
+        ref2 = DataReference(ExpressionDataSource(d2, "b"), ["v"])
+        filled, c1, c2 = get_cross_cdf(spark, ref1, ref2)
+        plan = _executed_plan(filled)
+        assert "Exchange SinglePartition" not in plan, (kind, plan)
+        # the bounded per-bucket cumsum remains
+        assert "Window" in plan, (kind, plan)
 
 
 def test_profile_two_clean_scans_exact_mode(spark):

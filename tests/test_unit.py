@@ -736,6 +736,53 @@ class TestBucketedGlobalCum:
         }
         assert got == want
 
+    @pytest.mark.parametrize(
+        "rows, schema",
+        [
+            ([(2**53, 1), (2**53 + 1, 3)], "v bigint, cnt bigint"),
+            (
+                [
+                    (Decimal("0.10000000000000000001"), 1),
+                    (Decimal("0.10000000000000000002"), 3),
+                ],
+                "v decimal(38,20), cnt bigint",
+            ),
+        ],
+        ids=["bigint", "decimal"],
+    )
+    def test_values_collapsing_to_one_double(self, spark, rows, schema):
+        # two distinct values that cast to the same double must still
+        # accumulate: the second value's cum is 1 + 3, not its own 3
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from datajudge_spark.operators.stats import _bucketed_global_cum
+
+        df = spark.createDataFrame(rows, schema)
+        got = {
+            r["v"]: r["cum"]
+            for r in _bucketed_global_cum(df, ["cnt"]).collect()
+        }
+        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
+        want = {
+            r["v"]: r["cum"]
+            for r in df.select("v", F.sum("cnt").over(w).alias("cum")).collect()
+        }
+        assert got == want
+        assert sorted(got.values()) == [1, 4]
+
+    def test_mann_whitney_values_collapsing_to_one_double(self, spark):
+        from datajudge_spark.operators.stats import mann_whitney_u
+
+        df = spark.createDataFrame(
+            [(2**53 + 1, "a"), (2**53 + 1, "a"), (2**53, "b")],
+            "x bigint, g string",
+        )
+        r = mann_whitney_u(df, "x", "g", "a", "b").first()
+        # both a-values exceed the one b-value: U_a = 2 of 2 pairs
+        assert r["u_a"] == 2.0
+        assert r["z"] > 0
+
 
 class TestGroupedKs:
     def test_matches_naive(self, spark):
